@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are fully materialized via the noop sink
@@ -39,8 +41,79 @@ import org.apache.spark.sql.SparkSession
   * silent regressions. Filtered runs (SPARK_GRAFT_BENCH_ONLY) write
   * bench_filtered.json instead, so the committed full-suite baseline is
   * never clobbered by a partial run, and their tripwire output is
-  * labeled informational (filtered timings drift vs in-suite ones). */
+  * labeled informational (filtered timings drift vs in-suite ones).
+  *
+  * Failures are never timings: a gate that throws (in the warm pass or
+  * any repeat) is marked failed with its error in the detail file's
+  * `status` map, skipped for the remaining repeats, left out of the
+  * total and the tripwire, listed before the movers, and counted as
+  * `n_failed` on the parsed line; under SPARK_GRAFT_BENCH_STRICT=1 the
+  * run then exits 1. */
 object Bench {
+  type Gate = (SparkSession, String) => org.apache.spark.sql.DataFrame
+
+  /** One gate's outcome: seconds and suite-relative start offsets of the
+    * repeats it completed, and the first error it threw. */
+  final case class GateRun(name: String, samples: Seq[Double],
+      starts: Seq[Double], error: Option[String]) {
+    def ok: Boolean = error.isEmpty
+  }
+
+  /** An untimed warm pass over every gate, then `repeats` timed passes
+    * round-robin across the suite; each call materializes the gate's
+    * frame through the noop sink. */
+  def runSuite(spark: SparkSession, sfDir: String, gates: Seq[(String, Gate)],
+      repeats: Int): Seq[GateRun] = {
+    val errors = Array.fill[Option[String]](gates.size)(None)
+    val samples = Array.fill(gates.size)(Vector.empty[Double])
+    val starts = Array.fill(gates.size)(Vector.empty[Double])
+    def runOnce(i: Int): Boolean = errors(i).isEmpty && {
+      try { gates(i)._2(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+      catch {
+        case e @ (NonFatal(_) | _: StackOverflowError) =>
+          errors(i) = Some(s"${e.getClass.getName}: ${e.getMessage}"); false
+      }
+    }
+    gates.indices.foreach(runOnce)
+    val suiteT0 = System.nanoTime()
+    for (_ <- 0 until repeats; i <- gates.indices if errors(i).isEmpty) {
+      val start = (System.nanoTime() - suiteT0) / 1e9
+      val t0 = System.nanoTime()
+      if (runOnce(i)) {
+        samples(i) :+= (System.nanoTime() - t0) / 1e9
+        starts(i) :+= start
+      }
+    }
+    gates.indices.map(i => GateRun(gates(i)._1, samples(i), starts(i), errors(i)))
+  }
+
+  /** The compact line printed last (the one the harness parses): total
+    * over the passing gates, `n_failed`, and the slowest gates (3-decimal
+    * secs) until a 1600-char budget is hit. */
+  def summaryLine(results: Seq[(String, Double)], nFailed: Int,
+      cpusJson: String, sfDir: String): String = {
+    val total = results.map(_._2).sum
+    val sb = new StringBuilder
+    sb.append(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"n_failed":$nFailed,"cpus":$cpusJson,""")
+    sb.append("\"queries\":{")
+    var first = true
+    for ((k, v) <- results.sortBy(-_._2)) {
+      val entry = (if (first) "" else ",") + "\"" + k + "\":" + f"$v%.3f"
+      if (sb.length + entry.length < 1600) { sb.append(entry); first = false }
+    }
+    sb.append(s"""},"sf":"$sfDir"}""")
+    sb.toString
+  }
+
+  /** JSON string literal. */
+  private def jsonString(s: String): String =
+    s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }.mkString("\"", "", "\"")
+
   /** Minimal parse of the {"queries":{"name":secs,...}} map out of a
     * previous bench line — no JSON lib needed for flat string->double. */
   private def parseQueries(line: String): Map[String, Double] = {
@@ -97,23 +170,12 @@ object Bench {
         java.nio.file.Paths.get("bench_full.json")), "UTF-8"))
       catch { case _: Throwable => Map.empty }
     val qs = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => only(q._1))
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    qs.foreach { case (_, fn) => runOnce(fn) } // warm pass, untimed
     val repeats = sys.env.get("SPARK_GRAFT_BENCH_REPEATS")
       .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0).getOrElse(3)
-    val samples = Array.fill(qs.size)(Array.fill(repeats)(0.0))
-    val starts = Array.fill(qs.size)(Array.fill(repeats)(0.0))
-    val suiteT0 = System.nanoTime()
-    for (r <- 0 until repeats; i <- qs.indices) {
-      starts(i)(r) = (System.nanoTime() - suiteT0) / 1e9
-      val t0 = System.nanoTime()
-      runOnce(qs(i)._2)
-      samples(i)(r) = (System.nanoTime() - t0) / 1e9
-    }
-    val results = qs.indices.map(i => qs(i)._1 -> samples(i).min)
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val runs = runSuite(spark, sfDir, qs, repeats)
+    val failed = runs.filterNot(_.ok)
+    val results = runs.filter(_.ok).map(r => r.name -> r.samples.min)
+    val total = results.map(_._2).sum
     // Full per-query detail goes to a file (and an early log line): the
     // harness only retains the LAST ~2000 chars of stdout, so the line it
     // parses must stay comfortably under that. Rounds 1-3 printed a ~3.5 KB
@@ -127,21 +189,20 @@ object Bench {
     // (e.g. "*") is emitted quoted so the line stays valid JSON.
     val cpusJson = if (cpus.matches("\\d+")) cpus else "\"" + cpus + "\""
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpusJson,"queries":$fullQs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_failed":${failed.size},"cpus":$cpusJson,"queries":$fullQs,"sf":"$sfDir"}"""
     // Detail line adds per-repeat samples and suite-relative start offsets
     // (file only — stdout stays compact): a contention window shows up as
     // one inflated sample column across a contiguous start-offset span.
-    val perRepeat = qs.indices.map { i =>
-      "\"" + qs(i)._1 + "\":[" +
-        samples(i).map(s => f"$s%.3f").mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val startOffsets = qs.indices.map { i =>
-      "\"" + qs(i)._1 + "\":[" +
-        starts(i).map(s => f"$s%.1f").mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    def perGate(values: GateRun => Seq[Double], fmt: Double => String) =
+      runs.map(r => "\"" + r.name + "\":" + values(r).map(fmt).mkString("[", ",", "]"))
+        .mkString("{", ",", "}")
+    val status = runs.map(r => "\"" + r.name + "\":" + jsonString(r.error.getOrElse("ok")))
+      .mkString("{", ",", "}")
     val detailLine = fullLine.dropRight(1) +
       s""","repeats":$repeats,"foreign_jvms":${foreign.size}""" +
-      s""","samples":$perRepeat,"starts":$startOffsets}"""
+      s""","status":$status""" +
+      s""","samples":${perGate(_.samples, s => f"$s%.3f")}""" +
+      s""","starts":${perGate(_.starts, s => f"$s%.1f")}}"""
     val outFile =
       if (filtered.isDefined) "bench_filtered.json" else "bench_full.json"
     try java.nio.file.Files.write(
@@ -149,6 +210,10 @@ object Bench {
       (detailLine + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
     println(fullLine)
+    if (failed.nonEmpty) {
+      println(s"FAILED GATES: ${failed.size} (left out of the total)")
+      failed.foreach(r => println(s"  ${r.name}: ${r.error.get}"))
+    }
     // Tripwire vs the previous full-suite run, DRIFT-CORRECTED: uniform
     // host slowdown/speedup moves every query by the same factor, so each
     // per-query ratio is divided by the suite median ratio before the
@@ -189,17 +254,9 @@ object Bench {
       println("TRIPWIRE: no comparable queries vs baseline — regression check did NOT run.")
     }
     spark.stop()
-    // Compact summary line, printed LAST: total over ALL queries, plus the
-    // slowest queries (3-decimal secs) until a 1600-char budget is hit.
-    val sb = new StringBuilder
-    sb.append(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"cpus":$cpusJson,""")
-    sb.append("\"queries\":{")
-    var first = true
-    for ((k, v) <- results.sortBy(-_._2)) {
-      val entry = (if (first) "" else ",") + "\"" + k + "\":" + f"$v%.3f"
-      if (sb.length + entry.length < 1600) { sb.append(entry); first = false }
-    }
-    sb.append(s"""},"sf":"$sfDir"}""")
-    println(sb.toString)
+    // Compact summary line, printed LAST
+    println(summaryLine(results, failed.size, cpusJson, sfDir))
+    if (failed.nonEmpty && sys.env.get("SPARK_GRAFT_BENCH_STRICT").contains("1"))
+      sys.exit(1)
   }
 }

@@ -36,23 +36,10 @@ case class GreatCircleDistance(first: Expression, second: Expression,
   private val Rad = java.lang.Double.toString(math.Pi / 180.0)
 
   override protected def nullSafeEval(lat1: Any, lon1: Any,
-      lat2: Any, lon2: Any): Any = {
-    val rad = math.Pi / 180.0
-    val p1 = lat1.asInstanceOf[Double] * rad
-    val p2 = lat2.asInstanceOf[Double] * rad
-    val l1 = lon1.asInstanceOf[Double] * rad
-    val l2 = lon2.asInstanceOf[Double] * rad
-    val ca = 2.0 * math.asin(math.sqrt(
-      math.pow(math.sin((p1 - p2) / 2), 2) +
-        math.cos(p1) * math.cos(p2) * math.pow(math.sin((l1 - l2) / 2), 2)))
-    val deg = ca * (180.0 / math.Pi)
-    units match {
-      case "nm"      => deg * 60.0
-      case "km"      => (deg * 60.0) * 1.852
-      case "mi"      => (deg * 60.0) * 1.15077945
-      case "degrees" => deg
-    }
-  }
+      lat2: Any, lon2: Any): Any =
+    GreatCircleDistance.distance(lat1.asInstanceOf[Double],
+      lon1.asInstanceOf[Double], lat2.asInstanceOf[Double],
+      lon2.asInstanceOf[Double], units)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (lat1, lon1, lat2, lon2) => {
@@ -80,6 +67,30 @@ case class GreatCircleDistance(first: Expression, second: Expression,
 }
 
 object GreatCircleDistance {
+
+  /** The scalar haversine behind the interpreted path, in the same
+    * double-op order as the generated code and `Geo.greatCircle`, so
+    * plain-Scala callers (the storm resolver's fold) get bit-identical
+    * distances. */
+  def distance(lat1: Double, lon1: Double, lat2: Double, lon2: Double,
+      units: String = "nm"): Double = {
+    val rad = math.Pi / 180.0
+    val p1 = lat1 * rad
+    val p2 = lat2 * rad
+    val l1 = lon1 * rad
+    val l2 = lon2 * rad
+    val ca = 2.0 * math.asin(math.sqrt(
+      math.pow(math.sin((p1 - p2) / 2), 2) +
+        math.cos(p1) * math.cos(p2) * math.pow(math.sin((l1 - l2) / 2), 2)))
+    val deg = ca * (180.0 / math.Pi)
+    units match {
+      case "nm"      => deg * 60.0
+      case "km"      => (deg * 60.0) * 1.852
+      case "mi"      => (deg * 60.0) * 1.15077945
+      case "degrees" => deg
+      case other     => throw new IllegalArgumentException(s"unit: $other")
+    }
+  }
 
   /** Column API over the native expression. */
   def greatCircleNative(lat1: Column, lon1: Column, lat2: Column,

@@ -32,7 +32,9 @@ object Pipelines {
     val rid = runId("STORMS", now)
     val bdeck = AtcfParser.parseBDeck(AtcfParser.readDeckLines(spark, landing))
 
-    val summaries = AtcfParser.stormSummaries(bdeck)
+    // one per-file summary frame feeds both the resolver and the
+    // observations' file → storm keys
+    val summaries = AtcfParser.stormSummaries(bdeck).transform(Checkpoints.stable)
     val existing = store.read("storms", Schemas.storms)
     val storms = StormResolver.resolve(existing, summaries, now, rid)
       .withColumn("last_update", lit(now))

@@ -123,7 +123,9 @@ final class Store(spark: SparkSession, root: String) {
       .parquet(stage)
     val target = new java.io.File(path(table))
     if (target.exists()) FsUtils.deleteRecursively(target)
-    new java.io.File(stage).renameTo(target)
+    // the target is already gone here: a failed swap must throw, never
+    // leave the table silently missing
+    java.nio.file.Files.move(new java.io.File(stage).toPath, target.toPath)
   }
 
   /** Parquet data files currently backing the table — the quantity

@@ -37,6 +37,7 @@ object StreamingIngest {
           val bdeck = graft.parse.AtcfParser.parseBDeck(lines)
           val ts = now()
           val summaries = graft.parse.AtcfParser.stormSummaries(bdeck)
+            .transform(graft.pipeline.Checkpoints.stable)
           val storms = graft.resolve.StormResolver.resolve(
             store.read("storms", graft.schema.Schemas.storms),
             summaries, ts, Pipelines.runId("STORMS_STREAM", ts))

@@ -41,6 +41,16 @@ class StoreCompactSpec extends AnyFunSuite {
     assert(back.select("region", "season").distinct().count() == 4)
   }
 
+  test("write fails loudly when the staged table cannot be swapped in") {
+    val store = freshStore("swap")
+    // the staging write creates its parent dirs; the swap target's parent
+    // ("nested") does not exist, so the move into place must throw
+    val err = intercept[java.nio.file.NoSuchFileException] {
+      store.write("nested/t", (1L to 10L).toDF("id"))
+    }
+    assert(err.getMessage.contains("staging_nested"))
+  }
+
   test("compact splits an oversized partition at maxRecordsPerFile") {
     val store = freshStore("split")
     store.write("t", (1L to 1000L).toDF("id")
