@@ -106,7 +106,7 @@ object Bench {
   }
 
   /** JSON string literal. */
-  private def jsonString(s: String): String =
+  private[graft] def jsonString(s: String): String =
     s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

@@ -14,7 +14,8 @@ import org.apache.spark.sql.SparkSession
   * the default in-JVM-heap HDFSBackedStateStoreProvider to Spark's
   * built-in RocksDB provider (+ changelog checkpointing, so per-batch
   * checkpoint cost is the delta, not a full snapshot). The state-growth
-  * model (StreamStateProbe: state ≈ rate × (delay + range)) is
+  * model (state ≈ rate × (delay + range), README "Streaming
+  * state-growth probe") is
   * provider-independent; the provider decides where that state LIVES —
   * on-heap is fine at gate scale, RocksDB keeps executor heaps flat
   * when a 100 TB stream × a 7-day delay puts gigabytes of keyed state

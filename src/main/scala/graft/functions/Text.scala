@@ -157,15 +157,6 @@ object Text {
       "xin", " qi", "qu ", "ai ", "tia", "nia", "lia", "ta ", " ta", "ti ",
       "tin", "min", "ei ", "na ", "qia", "wan", "g d", "ge ", " ge", "i d"))
 
-  /** All character trigrams of a PRE-BOUND string column (one per start
-    * position; same bound-attribute contract as [[shinglesFromTokens]] —
-    * an inline tree would re-evaluate per position). Guarded for <3-char
-    * strings (Spark's `sequence(1, 0)` counts DOWN). */
-  def charTrigrams(s: Column): Column =
-    when(length(s) >= 3,
-      transform(sequence(lit(1), length(s) - 2), i => s.substr(i, lit(3))))
-      .otherwise(array().cast("array<string>"))
-
   /** Quality signals: share of alphabetic chars, mean word length — kept
     * as exact integer numerators/denominators for oracle-stable output. */
   def charCount(text: Column): Column = length(text)

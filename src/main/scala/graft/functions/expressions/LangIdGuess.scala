@@ -18,10 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[ByteEntropy]] / [[PqEncode]] escalation precedent; guide §2.1 a
   * removable shuffle, §4 hot-path expression forests).
   *
-  * Bit-identity with the expression form it replaced (retained as
-  * `textLangidHof`, kill switch `-Dgraft.text.nativeLangid=false`;
-  * TextLangIdSpec pins row equality on real corpora and planted edge
-  * docs):
+  * Bit-identity with the expression form it replaced (now the
+  * test-code reference; TextLangIdSpec pins row equality on real
+  * corpora and planted edge docs, interpreted and compiled):
   *   - trigram extraction replays `substr(i, 3)` over CODE POINTS
   *     (UTF-8 lead-byte offsets — `UTF8String.substringSQL`'s unit), so
   *     multi-byte windows slice identically;

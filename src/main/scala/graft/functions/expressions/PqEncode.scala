@@ -30,7 +30,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * differs in detail (nulls percolate through sort_array ordering), but
   * [[graft.similarity.Pq.microNormalized]] guarantees non-null
   * fixed-width vectors, so these states mark corrupted inputs, not a
-  * reachable path — pinned equivalent on real data in PqSpec.
+  * reachable path — pinned equivalent to the HOF form (test-code
+  * reference) on real data in PqSpec, interpreted and compiled.
   */
 case class PqEncode(child: Expression, m: Int, k: Int, subDim: Int,
     flatBooks: Seq[Long]) extends UnaryExpression {

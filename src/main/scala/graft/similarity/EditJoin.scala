@@ -44,47 +44,32 @@ import org.apache.spark.sql.functions._
   */
 object EditJoin {
 
-  /** Which plan shape verifies candidates; see [[verifiedPairs]].
-    * Switchable only for the same-JVM A/B harness
-    * ([[graft.tools.AbFuzzy]]) — production always takes the default. */
-  private def verifyForm: String =
-    sys.props.getOrElse("graft.editjoin.verify", "condition")
-
   /** Candidate verify shared by all six join sites: join `a`/`b` (aliased
     * "a"/"b") on the pruning condition and keep pairs whose banded
     * levenshtein is within `maxDist` (the banded kernel returns -1 above
-    * the band). Two equivalent plan shapes exist:
+    * the band). `lev >= 0` rides in the join condition, so non-matches
+    * die inside the join operator and never materialize as output rows;
+    * the projected `ed` re-evaluates the kernel only for SURVIVORS
+    * (output-bound, tiny vs candidates).
     *
-    *  - CONDITION form (default): `lev >= 0` rides in the join
-    *    condition, so non-matches die inside the join operator and never
-    *    materialize as output rows; the projected `ed` re-evaluates the
-    *    kernel only for SURVIVORS (output-bound, tiny vs candidates).
-    *  - PROJECT form: `ed` is projected once and filtered above the
-    *    join. The round-12 edit assumed this halves kernel evaluations,
-    *    but PushPredicateThroughJoin rewrites the deterministic filter
-    *    back into the join condition anyway, reproducing the condition
-    *    shape — same plan, and the measured round-12 bench showed the
-    *    fuzzy family 1.3-1.4x SLOWER, not faster.
-    *
-    * Measured (graft.tools.AbFuzzy, same JVM, interleaved A/B/A/B, 4
-    * reps, sf0.1): condition vs project min 4.35s vs 5.59s
-    * (q_join_fuzzy), 4.92s vs 5.84s (q_entity_resolution), 2.85s vs
-    * 2.78s (q_decontaminate_fuzzy); plan census shows BOTH forms carry
-    * 4 levenshtein instances and no standalone Filter, i.e. the project
+    * Why not project `ed` once and filter above the join: the round-12
+    * edit assumed that halves kernel evaluations, but
+    * PushPredicateThroughJoin rewrites the deterministic filter back
+    * into the join condition anyway. Measured (same JVM, interleaved
+    * A/B/A/B, 4 reps, sf0.1; README "EditJoin verify-form A/B"):
+    * condition vs project min 4.35s vs 5.59s (q_join_fuzzy), 4.92s vs
+    * 5.84s (q_entity_resolution), 2.85s vs 2.78s
+    * (q_decontaminate_fuzzy); plan census shows BOTH forms carry 4
+    * levenshtein instances and no standalone Filter, i.e. the project
     * form is optimized back into a join-condition shape but still runs
-    * 1.2-1.3x slower. The condition form is the measured winner and the
-    * default. */
+    * 1.2-1.3x slower. */
   private def verifiedPairs(a: DataFrame, b: DataFrame,
       cond: org.apache.spark.sql.Column, outL: String, outR: String,
       maxDist: Int): DataFrame = {
     val lv = levenshtein(col("a.str"), col("b.str"), maxDist)
-    val out = Seq(col("a.str").as(outL), col("b.str").as(outR),
-      lv.cast("int").as("ed"))
-    if (verifyForm == "condition")
-      a.as("a").join(b.as("b"), cond && lv >= 0).select(out: _*)
-    else
-      a.as("a").join(b.as("b"), cond).select(out: _*)
-        .filter(col("ed") >= 0)
+    a.as("a").join(b.as("b"), cond && lv >= 0)
+      .select(col("a.str").as(outL), col("b.str").as(outR),
+        lv.cast("int").as("ed"))
   }
 
   /** All pairs (id_a < id_b) with levenshtein(str_a, str_b) <= maxDist.

@@ -18,7 +18,7 @@ import graft.similarity.{EditJoin, JaroWinklerJoin}
   * indexes — so the next micro-batch resolves against them. The corpus
   * itself is never re-shingled; per-batch cost is proportional to the
   * batch and its band collisions (measured flat-to-sublinear in corpus
-  * size by IncrementalScaleProbe).
+  * size; README "Persisted corpus-index path").
   *
   * Exactly the reference's nightly match-against-existing-entities run
   * (tcdb/etl/process_storms.py:84-138) made continuous, generalized to

@@ -10,9 +10,10 @@ import graft.functions.Text
   *
   * The native fused Cavnar–Trenkle kernel
   * ([[graft.functions.expressions.LangIdGuess]]) must be row-identical
-  * to the composed-built-ins form it replaced ([[TextOps.textLangidHof]]
+  * to the composed-built-ins form it replaced ([[HofTextOps.textLangid]]
   * — explode, doc_id ranking windows, broadcast profile join,
-  * per-language fold, und-branch union). The profiles must be well
+  * per-language fold, und-branch union), on the interpreted and the
+  * compiled evaluation path. The profiles must be well
   * formed and separate the es/pt confusable pair they exist for (engine
   * parity is the q_text_langid DuckDB gate's job). */
 class TextLangIdSpec extends AnyFunSuite {
@@ -24,10 +25,12 @@ class TextLangIdSpec extends AnyFunSuite {
 
   test("native kernel is row-identical to the HOF form on real sf0.001 " +
       "documents") {
-    val nat = rows(TextOps.textLangid(spark, "/root/testdata/sf0.001"))
-    val hof = rows(TextOps.textLangidHof(spark, "/root/testdata/sf0.001"))
-    assert(nat.nonEmpty)
-    assert(nat == hof)
+    TestSpark.onEachEvaluationPath { path =>
+      val nat = rows(TextOps.textLangid(spark, "/root/testdata/sf0.001"))
+      val hof = rows(HofTextOps.textLangid(spark, "/root/testdata/sf0.001"))
+      assert(nat.nonEmpty, path)
+      assert(nat == hof, path)
+    }
   }
 
   test("native kernel matches the HOF form on planted edge documents " +
@@ -46,10 +49,12 @@ class TextLangIdSpec extends AnyFunSuite {
     val dir = java.nio.file.Files
       .createTempDirectory("li_edge").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val nat = rows(TextOps.textLangid(spark, dir))
-    val hof = rows(TextOps.textLangidHof(spark, dir))
-    assert(nat == hof)
-    assert(nat.map(_._3).sum == 8L)  // every document is counted
+    TestSpark.onEachEvaluationPath { path =>
+      val nat = rows(TextOps.textLangid(spark, dir))
+      val hof = rows(HofTextOps.textLangid(spark, dir))
+      assert(nat == hof, path)
+      assert(nat.map(_._3).sum == 8L, path)  // every document is counted
+    }
   }
 
   test("ranked profiles are 3-char trigrams, distinct within a language") {

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** Product quantization: encode determinism, ADC quality on clustered
+/** Product quantization: native encode == the HOF form ([[HofPq]]) on
+  * both evaluation paths, encode determinism, ADC quality on clustered
   * data (where PQ's contract holds), k-means vs head codebooks, and
   * persisted-serving equality. */
 class PqSpec extends AnyFunSuite {
@@ -48,14 +49,8 @@ class PqSpec extends AnyFunSuite {
     val real = graft.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
       .filter(Pq.l2Norm(col("embedding")) > 0)
       .select(col("vec_id"), Pq.microNormalized(col("embedding")).as("mv"))
-    for (src <- Seq(real, micro)) {
-      val cb = Pq.trainHead(src, "vec_id", "mv", m = 8, k = 16)
-      val nat = Pq.encode(src, "vec_id", "mv", cb).collect()
-        .map(r => (r.getLong(0), r.getSeq[Int](1))).sortBy(_._1).toSeq
-      val hof = Pq.encodeHof(src, "vec_id", "mv", cb).collect()
-        .map(r => (r.getLong(0), r.getSeq[Int](1))).sortBy(_._1).toSeq
-      assert(nat == hof)
-    }
+    val books = Seq(real, micro).map(src =>
+      src -> Pq.trainHead(src, "vec_id", "mv", m = 8, k = 16))
     // duplicated codewords force exact distance ties in every subspace:
     // both forms must resolve to the smallest code
     val m0 = micro
@@ -63,12 +58,16 @@ class PqSpec extends AnyFunSuite {
       val c = Pq.trainHead(m0, "vec_id", "mv", m = 8, k = 2)
       c.copy(books = c.books.map(b => Array(b(0), b(0))))
     }
-    val natTie = Pq.encode(m0, "vec_id", "mv", cbDup).collect()
-      .map(r => r.getSeq[Int](1))
-    assert(natTie.forall(_.forall(_ == 0)))
-    val hofTie = Pq.encodeHof(m0, "vec_id", "mv", cbDup).collect()
-      .map(r => r.getSeq[Int](1))
-    assert(hofTie.forall(_.forall(_ == 0)))
+    def codes(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getSeq[Int](1))).sortBy(_._1).toSeq
+    TestSpark.onEachEvaluationPath { path =>
+      for ((src, cb) <- books)
+        assert(codes(Pq.encode(src, "vec_id", "mv", cb))
+          == codes(HofPq.encode(src, "vec_id", "mv", cb)), path)
+      val natTie = codes(Pq.encode(m0, "vec_id", "mv", cbDup))
+      assert(natTie.forall(_._2.forall(_ == 0)), path)
+      assert(natTie == codes(HofPq.encode(m0, "vec_id", "mv", cbDup)), path)
+    }
   }
 
   test("encode emits one in-range code per subspace, deterministically") {

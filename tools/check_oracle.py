@@ -5,7 +5,9 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [options]
 
 For each query dir under <verifyOutDir>: load the Spark parquet result,
 run the oracle SQL from oracle_sql.json in DuckDB over the same tables,
-sort columns by name + rows by all columns, and compare values.
+sort columns by name + rows by all columns, and compare values. Every
+gate that <verifyOutDir>/_status.json marks as failed (the gate threw
+in graft.Verify) counts as a FAIL.
 
 Options / env:
   --incremental       Skip gates whose (oracle SQL, normalized Spark
@@ -159,17 +161,27 @@ def main(argv) -> int:
     # the same path (same realpath, different table bytes).
     sf_key = os.path.realpath(sf_dir)
     data_key = data_fingerprint(sf_dir) if incremental else None
+    # graft.Verify deletes a failed gate's dir and records the error in
+    # _status.json; without this, a gate that threw would be left out of
+    # the count instead of failing it
+    status_path = f"{out_dir}/_status.json"
+    status = json.load(open(status_path)) if os.path.exists(status_path) else {}
+    errors = {k: v for k, v in status.items() if v != "ok"}
     n_pass = n_fail = n_skip = n_oob = 0
-    for name in sorted(os.listdir(out_dir)):
-        if not os.path.isdir(f"{out_dir}/{name}") or name.startswith("_"):
-            continue
+    names = {n for n in os.listdir(out_dir)
+             if os.path.isdir(f"{out_dir}/{n}") and not n.startswith("_")}
+    for name in sorted(names | errors.keys()):
         if only and not any(name.startswith(p) for p in only):
+            continue
+        if shard and stable_hash(name) % shard[1] != shard[0]:
+            continue
+        if name in errors:
+            print(f"FAIL {name}: verify error {errors[name]}")
+            n_fail += 1
             continue
         if name in skip:
             print(f"SKIP {name} (--skip: verify out of band)")
             n_oob += 1
-            continue
-        if shard and stable_hash(name) % shard[1] != shard[0]:
             continue
         got = con.execute(
             f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')").df()
