@@ -21,12 +21,11 @@ object Tables {
     // NTZ keeps every downstream timestamp naive-UTC end to end (parquet
     // written isAdjustedToUTC=false), matching the oracle engine exactly.
     val df = spark.read.parquet(s"$dir/$name.parquet")
-    df.schema.fields.foldLeft(df) {
-      case (d, f) if f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType =>
-        d.withColumn("ts", org.apache.spark.sql.functions
-          .expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)"))
-      case (d, _) => d
-    }
+    if (df.schema.exists(f => f.name == "ts" &&
+        f.dataType == org.apache.spark.sql.types.LongType))
+      df.withColumn("ts", org.apache.spark.sql.functions
+        .expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)"))
+    else df
   }
 
   /** Cheap identity token of ONE table's bytes at `dir` (file names,

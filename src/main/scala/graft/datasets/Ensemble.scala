@@ -186,29 +186,26 @@ object Ensemble {
       .rowsBetween(Window.unboundedPreceding, -1)
     def mark(v: String) = when(col(v).isNotNull,
       struct(col(ordCol).as("o"), col(v).as("x")))
-    // both neighbor passes for ALL columns first (each direction's
-    // projections collapse into one Window node = one sort), then the
-    // per-column lerp
-    val withNbrs = valueCols.foldLeft(tracks) { (df, v) =>
-      df.withColumn(s"__pv_$v",
-          last(mark(v), ignoreNulls = true).over(wAsc))
-        .withColumn(s"__nv_$v",
-          last(mark(v), ignoreNulls = true).over(wDesc))
-    }
-    valueCols.foldLeft(withNbrs) { (df, v) =>
+    // both neighbor passes for ALL columns first (one Window node per
+    // direction = one sort each), then the per-column lerp
+    val nbrs = valueCols.flatMap(v => Seq(
+      last(mark(v), ignoreNulls = true).over(wAsc).as(s"__pv_$v"),
+      last(mark(v), ignoreNulls = true).over(wDesc).as(s"__nv_$v")))
+    def lerp(v: String): Column = {
       val pv = col(s"__pv_$v")
       val nv = col(s"__nv_$v")
       // the nv.o > pv.o guard keeps a malformed series (duplicate
       // ordinates around a gap) at null instead of silently producing
       // NaN/Infinity from a zero-width interval
-      df.withColumn(v,
-          when(col(v).isNotNull, col(v)).otherwise(
-            when(nv.getField("o") > pv.getField("o"),
-              pv.getField("x") + (nv.getField("x") - pv.getField("x")) *
-                ((col(ordCol) - pv.getField("o")) /
-                  (nv.getField("o") - pv.getField("o"))))))
-        .drop(s"__pv_$v", s"__nv_$v")
+      when(col(v).isNotNull, col(v)).otherwise(
+        when(nv.getField("o") > pv.getField("o"),
+          pv.getField("x") + (nv.getField("x") - pv.getField("x")) *
+            ((col(ordCol) - pv.getField("o")) /
+              (nv.getField("o") - pv.getField("o")))))
     }
+    tracks.select(col("*") +: nbrs: _*)
+      .select(tracks.columns.toIndexedSeq.map(c =>
+        if (valueCols.contains(c)) lerp(c).as(c) else col(c)): _*)
   }
 
   /** The naive forward-neighbor encoding — an `unboundedFollowing`
@@ -220,20 +217,21 @@ object Ensemble {
       keys: Seq[String], ordCol: String,
       valueCols: Seq[String]): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(ordCol))
-    valueCols.foldLeft(tracks) { (df, v) =>
+    def lerp(v: String): Column = {
       val mark = when(col(v).isNotNull,
         struct(col(ordCol).as("o"), col(v).as("x")))
       val pv = last(mark, ignoreNulls = true)
         .over(w.rowsBetween(Window.unboundedPreceding, -1))
       val nv = first(mark, ignoreNulls = true)
         .over(w.rowsBetween(1, Window.unboundedFollowing))
-      df.withColumn(v,
-        when(col(v).isNotNull, col(v)).otherwise(
-          when(nv.getField("o") > pv.getField("o"),
-            pv.getField("x") + (nv.getField("x") - pv.getField("x")) *
-              ((col(ordCol) - pv.getField("o")) /
-                (nv.getField("o") - pv.getField("o"))))))
+      when(col(v).isNotNull, col(v)).otherwise(
+        when(nv.getField("o") > pv.getField("o"),
+          pv.getField("x") + (nv.getField("x") - pv.getField("x")) *
+            ((col(ordCol) - pv.getField("o")) /
+              (nv.getField("o") - pv.getField("o")))))
     }
+    tracks.select(tracks.columns.toIndexedSeq.map(c =>
+      if (valueCols.contains(c)) lerp(c).as(c) else col(c)): _*)
   }
 
   /** Wide-grid intake — the executable contract for out-of-band ensemble

@@ -27,9 +27,7 @@ object Merge {
       s"schema mismatch: ${existing.columns.mkString(",")} vs ${incoming.columns.mkString(",")}")
     val dataCols = existing.columns.filterNot(keys.contains).toSeq
     val ex = existing.withColumn("__ex_present", lit(true))
-    val inc = incoming.columns.foldLeft(incoming)((df, c) =>
-        df.withColumnRenamed(c, s"__inc_$c"))
-      .withColumn("__inc_present", lit(true))
+    val inc = incomingSide(incoming)
     // NULL-SAFE key equality: a NULL key component is a key VALUE — the
     // reference's one_or_none natural-key lookup compiles to `col IS
     // NULL` and matches (atcf_forecasts.py:75-135) — so a replayed batch
@@ -61,6 +59,12 @@ object Merge {
       .select(existing.columns.map(col).toIndexedSeq: _*)
   }
 
+  /** The incoming side of the join in one projection: every column
+    * renamed `__inc_<name>`, plus the `__inc_present` row marker. */
+  private def incomingSide(incoming: DataFrame): DataFrame =
+    incoming.select(incoming.columns.toIndexedSeq.map(c => incoming(c).as(s"__inc_$c")) :+
+      lit(true).as("__inc_present"): _*)
+
   /** Per-action counters the reference logs after each run
     * (tcdb/etl/atcf_forecasts.py:137-141): inserted / updated / unchanged.
     */
@@ -68,9 +72,7 @@ object Merge {
       keys: Seq[String]): DataFrame = {
     val dataCols = existing.columns.filterNot(keys.contains).toSeq
     val ex = existing.withColumn("__ex_present", lit(true))
-    val inc = incoming.columns.foldLeft(incoming)((df, c) =>
-        df.withColumnRenamed(c, s"__inc_$c"))
-      .withColumn("__inc_present", lit(true))
+    val inc = incomingSide(incoming)
     // null-safe keys + presence markers, mirroring [[upsert]]
     val joinCond = keys.map(k => ex(k) <=> inc(s"__inc_$k")).reduce(_ && _)
     val joined = ex.join(inc, joinCond, "full_outer")

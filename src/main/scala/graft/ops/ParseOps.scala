@@ -147,20 +147,23 @@ object ParseOps {
     * parser), ~5% short (18 fields, extras null-padded), rest full. */
   private def rawLines(spark: SparkSession, dir: String, defs: Seq[F],
       filePrefix: String): DataFrame = {
-    val withFields = defs.zipWithIndex.foldLeft(rawBase(spark, dir)) {
-      case (d, (f, i)) => d.withColumn(f"c${i + 1}%02d", f.spark)
-    }
     val cs = (1 to defs.size).map(i => col(f"c$i%02d"))
-    withFields
-      .withColumn("file", concat(lit(filePrefix), lower(col("basin")),
-        lpad(col("nn").cast("string"), 2, "0"), col("season").cast("string"),
-        lit(".dat")))
-      .withColumn("value",
+    withFields(rawBase(spark, dir), defs)
+      .select(
+        concat(lit(filePrefix), lower(col("basin")),
+          lpad(col("nn").cast("string"), 2, "0"), col("season").cast("string"),
+          lit(".dat")).as("file"),
         when(col("ok") % 19 === 0, concat_ws(",", cs.take(5): _*))
           .when(col("ok") % 19 === 1, concat_ws(",", cs.take(18): _*))
-          .otherwise(concat_ws(",", cs: _*)))
-      .select("file", "value")
+          .otherwise(concat_ws(",", cs: _*)).as("value"))
   }
+
+  /** `base` plus one generated column `cNN` per field, in one projection
+    * (the fields read only `base` columns). */
+  private def withFields(base: DataFrame, defs: Seq[F]): DataFrame =
+    base.select(col("*") +: defs.zipWithIndex.map { case (f, i) =>
+      f.spark.as(f"c${i + 1}%02d")
+    }: _*)
 
   /** Generated fixture lines are memoized per (prefix, dir) AND
     * materialized via localCheckpoint: the barrier stops the parser's 37
@@ -280,10 +283,12 @@ object ParseOps {
        |SELECT file, value, CAST(len(str_split(value, ',')) AS INT) AS n_fields
        |FROM lines WHERE len(str_split(value, ',')) < 18""".stripMargin
 
-  /** Parsed b-deck, memoized+materialized: referenced by three gates and
-    * twice within stormSummaries (grouped aggregate + name mode) — the
-    * lineage truncation stops the branching plan from duplicating the
-    * 37-column parse per reference (the StormResolver lesson). */
+  /** Parsed b-deck, memoized + materialized: the gates that aggregate the
+    * parse (q_storm_summaries, q_observations_pivot) and every repeat of
+    * them share one 37-column parse pass, so they time their aggregate
+    * rather than a re-parse. q_parse_bdeck times the parse itself and
+    * does not read it. Each of the two plans reads the parse once (the
+    * storm summaries' name mode sits inside its per-file aggregate). */
   private def parsedBdeck(spark: SparkSession, dir: String): DataFrame =
     cachedLines("parsed-b", dir)(AtcfParser.parseBDeck(bdeckLines(spark, dir)))
 
@@ -504,14 +509,10 @@ object ParseOps {
     cachedLines("v", dir) { // same generator-inlining barrier as rawLines
       val defs = tcvitalsFields
       val base = load(spark, dir, "customer").select(col("c_custkey").as("ck"))
-      val withFields = defs.zipWithIndex.foldLeft(base) {
-        case (d, (f, i)) => d.withColumn(f"c${i + 1}%02d", f.spark)
-      }
       val rest = (2 to defs.size).map(i => col(f"c$i%02d"))
-      withFields.withColumn("value",
+      withFields(base, defs).select(
         concat(lit(" "), col("c01"), lit("  "),
-          concat_ws(" ", rest: _*), lit(" ")))
-        .select("value")
+          concat_ws(" ", rest: _*), lit(" ")).as("value"))
     }
 
   /** S5 — tcvitals parse with multi-sentinel NA decode. */

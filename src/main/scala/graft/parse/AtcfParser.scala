@@ -31,44 +31,43 @@ object AtcfParser {
   val MinFields = 18
   private def fieldCount: Column = size(split(col("value"), ","))
 
-  /** Split + ragged-normalize + positionally project `cols`; keeps `file`.
+  /** Split + ragged-normalize + positionally project and decode `cols`;
+    * keeps `file`. One filter and two projections, shared by both decks.
     *
     * The split lands behind its own projection ALIAS before the 37
     * positional `get`s reference it: CollapseProject keeps a non-cheap
     * alias with >1 use in its own project, so codegen splits each line
     * once instead of once per output column (measured 4.3 s -> ~1 s on
-    * 225k lines at sf0.1). */
-  private def project(lines: DataFrame, cols: Seq[String]): DataFrame = {
-    val projected = cols.zipWithIndex.map { case (name, i) =>
-      get(col("__parts"), lit(i)).as(name) // 0-based, null when OOB
+    * 225k lines at sf0.1). The typed decode is folded into the second
+    * projection, so the analyzer sees one `Project` per step instead of
+    * one per column. */
+  private def parseDeck(lines: DataFrame, cols: Seq[String],
+      numericCols: Seq[String]): DataFrame = {
+    val numeric = numericCols.toSet
+    val decoded = cols.zipWithIndex.map { case (name, i) =>
+      // 0-based, null when OOB
+      decode(name, get(col("__parts"), lit(i)), numeric).as(name)
     }
     lines
       .filter(fieldCount >= MinFields)
       .select(col("file"), split(col("value"), ",").as("__parts"))
-      .select((col("file") +: projected): _*)
+      .select((col("file") +: decoded): _*)
   }
 
-  /** Typed decode shared by both decks. */
-  private def decode(df: DataFrame, numericCols: Seq[String],
-      allCols: Seq[String]): DataFrame = {
-    val decoded = df
-      .withColumn("datetime", Atcf.parseAtcfDatetime(col("datetime")))
-      .withColumn("lat", Atcf.atcfLat(col("lat")))
-      .withColumn("lon", Atcf.atcfLon(col("lon")))
-      .withColumn("snum", trim(col("snum")).cast("int"))
-      .withColumn("tau", trim(col("tau")).cast("int"))
-      .withColumn("rad", Atcf.numOrNull(col("rad")))
-    val withNums = numericCols.foldLeft(decoded)((d, c) =>
-      d.withColumn(c, Atcf.numOrNull(col(c))))
-    val strCols = allCols.filterNot(c =>
-      (numericCols ++ Seq("datetime", "lat", "lon", "snum", "tau", "rad")).contains(c))
-    strCols.foldLeft(withNums)((d, c) => d.withColumn(c, Atcf.strOrNull(col(c))))
-  }
+  /** Typed decode of one raw positional field. */
+  private def decode(name: String, raw: Column, numeric: Set[String]): Column =
+    name match {
+      case "datetime" => Atcf.parseAtcfDatetime(raw)
+      case "lat" => Atcf.atcfLat(raw)
+      case "lon" => Atcf.atcfLon(raw)
+      case "snum" | "tau" => trim(raw).cast("int")
+      case n if n == "rad" || numeric(n) => Atcf.numOrNull(raw)
+      case _ => Atcf.strOrNull(raw)
+    }
 
   /** S1 — a-deck (forecast aids): 17 positional columns. */
   def parseADeck(lines: DataFrame): DataFrame =
-    decode(project(lines, Schemas.aDeckColumns),
-      Schemas.aDeckNumeric, Schemas.aDeckColumns)
+    parseDeck(lines, Schemas.aDeckColumns, Schemas.aDeckNumeric)
 
   /** S3 side-output — the rows the ragged-row filter DROPS (<18 fields,
     * tcdb/etl/atcf.py:245-246 logs and skips them). A quality-conscious
@@ -80,19 +79,19 @@ object AtcfParser {
 
   /** S2/S3 — b-deck (best track): 36 positional columns, ragged rows. */
   def parseBDeck(lines: DataFrame): DataFrame =
-    decode(project(lines, Schemas.bDeckColumns),
-      Schemas.bDeckNumeric, Schemas.bDeckColumns)
+    parseDeck(lines, Schemas.bDeckColumns, Schemas.bDeckNumeric)
 
   /** S5 — tcvitals: whitespace-delimited, multi-sentinel NA. */
   def parseTcvitals(lines: DataFrame): DataFrame = {
     val parts = split(regexp_replace(trim(col("value")), " +", ","), ",")
+    // the NA decode reads its positional alias, so the split is not
+    // repeated per NA comparison
     val projected = Schemas.tcvitalsColumns.zipWithIndex.map { case (name, i) =>
       get(parts, lit(i)).as(name)
     }
-    val df = lines.select(projected: _*)
-    Schemas.tcvitalsColumns.foldLeft(df)((d, c) =>
-      d.withColumn(c,
-        when(col(c).isin(Schemas.tcvitalsNa: _*), lit(null)).otherwise(col(c))))
+    val decoded = Schemas.tcvitalsColumns.map(c =>
+      when(col(c).isin(Schemas.tcvitalsNa: _*), lit(null)).otherwise(col(c)).as(c))
+    lines.select(projected: _*).select(decoded: _*)
   }
 
   /** P9 — date-membership probe (tcdb/etl/atcf.py:253-286): does any row
@@ -108,11 +107,11 @@ object AtcfParser {
 
   /** File-name metadata: `b{basin}{nn}{season}.dat` → (basin, nhc_number,
     * season) — tcdb/models/database.py:40-43. */
-  private def fileMeta(df: DataFrame): DataFrame = df
-    .withColumn("file_basin", upper(substring(col("file"), 2, 2)))
-    .withColumn("file_nhc_number", substring(col("file"), 4, 2).cast("int"))
-    .withColumn("file_season",
-      regexp_extract(col("file"), "^.(..)(..)([0-9]{4})", 3).cast("int"))
+  private[parse] def fileMeta(df: DataFrame): DataFrame = df.withColumns(Map(
+    "file_basin" -> upper(substring(col("file"), 2, 2)),
+    "file_nhc_number" -> substring(col("file"), 4, 2).cast("int"),
+    "file_season" ->
+      regexp_extract(col("file"), "^.(..)(..)([0-9]{4})", 3).cast("int")))
 
   /** Arg-min/arg-max by key with an EXPLICIT total order under key
     * DUPLICATES and null values: the ordered struct is (key, null-rank,
@@ -132,9 +131,23 @@ object AtcfParser {
     when(m.getField("vn") === 0, lit(null)).otherwise(m.getField("v"))
   }
 
+  /** pandas' `Series.mode()[0]` of `stormname` as an aggregate; the
+    * tie-break contract is in [[stormSummaries]]. */
+  private[parse] val nameMode: Column = mode(col("stormname"), deterministic = true)
+
   /** Per-file storm summary — the set-based `toStormDict`
-    * (tcdb/etl/atcf.py:289-337). One aggregation pass per file; "last row"
-    * becomes max-by event time (b-decks are chronologically ordered).
+    * (tcdb/etl/atcf.py:289-337). One aggregation pass per file, so one
+    * shuffle; "last row" becomes max-by event time (b-decks are
+    * chronologically ordered).
+    *
+    * The name falls back to the mode of `stormname` when the last row
+    * has none. The tie-break follows pandas' `mode()`: the highest
+    * count wins, and among equal counts the lexicographically smallest
+    * name (binary string order, so `ALPHA` < `Alpha`); nulls are not
+    * counted, and a file with no name has a null mode.
+    * [[nameMode]] computes exactly that inside the per-file aggregate;
+    * StormSummariesModeProps pins it to the count-then-join form in test
+    * code.
     */
   def stormSummaries(bdeck: DataFrame): DataFrame = {
     val rowKey = struct(col("datetime"), coalesce(col("rad"), lit(0.0)))
@@ -148,8 +161,7 @@ object AtcfParser {
         pickByKey(rowKey, col("snum"), lit(0), largest = true).as("snum_last"),
         lastStr("subregion").as("subregion_last"),
         lastStr("stormname").as("name_last"),
-        // mode of stormname with pandas' tie-break (lexicographic min):
-        // max count, then min value — computed distributed-safe below.
+        nameMode.as("name_mode"),
         pickByKey(col("datetime"), col("lat"), lit(0.0), largest = false)
           .as("lat_first"),
         pickByKey(col("datetime"), col("lon"), lit(0.0), largest = false)
@@ -157,33 +169,22 @@ object AtcfParser {
         min("datetime").as("start_date"),
         max("datetime").as("end_date"))
 
-    // pandas mode() tie-break = lexicographic MIN name (values sorted asc):
-    // min over (-count, name) picks max count, then min name on ties.
-    val nameMode = bdeck.filter(col("stormname").isNotNull)
-      .groupBy("file", "stormname").agg(count(lit(1)).as("c"))
-      .groupBy("file")
-      .agg(min(struct((-col("c")).as("nc"), col("stormname").as("v")))
-        .getField("v").as("name_mode"))
-
-    val org = when(lower(col("basin_first")).isin("al", "ep", "cp"), "NHC")
+    val region = col("basin_first")
+    val nhcNumber = col("snum_last")
+    val season = col("file_season")
+    val org = when(lower(region).isin("al", "ep", "cp"), "NHC")
       .otherwise("JTWC")
-    val stormType = Atcf.stormType(col("vmax_max"), col("basin_first"))
+    val stormType = Atcf.stormType(col("vmax_max"), region)
     val rawName = coalesce(col("name_last"), col("name_mode"))
-
-    grouped.join(nameMode, Seq("file"), "left_outer")
-      .withColumn("nhc_number", col("snum_last"))
-      .withColumn("region", col("basin_first"))
-      .withColumn("season", col("file_season"))
-      .withColumn("name",
-        when(col("nhc_number") >= 70,
-          Atcf.investName(org, col("nhc_number"), col("subregion_last")))
-        .otherwise(concat(stormType, lit("-"), Atcf.titleCase(rawName))))
-      .withColumn("nhc_id",
-        Atcf.nhcId(col("region"), col("nhc_number"), col("season")))
-      .withColumn("start_lat", Validators.validateLatitude(col("lat_first")))
-      .withColumn("start_lon", Validators.validateLongitude(col("lon_first")))
-      .select("file", "region", "nhc_number", "nhc_id", "season",
-        "start_date", "end_date", "name", "start_lat", "start_lon")
+    val name = when(nhcNumber >= 70,
+        Atcf.investName(org, nhcNumber, col("subregion_last")))
+      .otherwise(concat(stormType, lit("-"), Atcf.titleCase(rawName)))
+    grouped.select(col("file"), region.as("region"),
+      nhcNumber.as("nhc_number"),
+      Atcf.nhcId(region, nhcNumber, season).as("nhc_id"),
+      season.as("season"), col("start_date"), col("end_date"), name.as("name"),
+      Validators.validateLatitude(col("lat_first")).as("start_lat"),
+      Validators.validateLongitude(col("lon_first")).as("start_lon"))
   }
 
   /** Radial quadrant pivot for one threshold (tcdb/etl/atcf.py:418-427):

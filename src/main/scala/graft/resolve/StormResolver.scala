@@ -49,6 +49,10 @@ object StormResolver {
       start_lat: java.lang.Double, start_lon: java.lang.Double,
       run_id: String, incoming: Boolean, key: String)
 
+  /** Derived once: deriving a product encoder reflects over the case
+    * class on the driver, which showed in every b-deck tick. */
+  private lazy val rowEncoder = Encoders.product[StormRow]
+
   private val columns = Schemas.storms.fieldNames.toSeq.filterNot(_ == "last_update")
 
   private def tagged(df: DataFrame, incoming: Boolean): DataFrame =
@@ -69,14 +73,15 @@ object StormResolver {
       // stale invests (no obs for 24 h) are ignored (process_storms.py:79-81)
       .filter(col("nhc_number") < 90 || (col("nhc_number") >= 90 && age < 24 * 3600))
       // status stamp: Active if observed within 16 h (process_storms.py:205-208)
-      .withColumn("status", when(age <= 16 * 3600, "Active").otherwise("Archive"))
-      .withColumn("annual_id", lit(null))
-      .withColumn("run_id", lit(null))
+      .withColumns(Map(
+        "status" -> when(age <= 16 * 3600, "Active").otherwise("Archive"),
+        "annual_id" -> lit(null),
+        "run_id" -> lit(null)))
     tagged(existing, incoming = false).unionByName(tagged(incoming, incoming = true))
-      .as(Encoders.product[StormRow])
+      .as(rowEncoder)
       .groupByKey((r: StormRow) => r.key)(Encoders.STRING)
       .flatMapGroups((_: String, rows: Iterator[StormRow]) =>
-        resolveGroup(rows.toVector, runId))(Encoders.product[StormRow])
+        resolveGroup(rows.toVector, runId))(rowEncoder)
       // nhc_id first: the column order callers have always received
       .select(("nhc_id" +: columns.filterNot(_ == "nhc_id")).map(col): _*)
   }

@@ -65,8 +65,9 @@ object Replicate {
         case None => df // tiny dims unchanged
         case Some(keys) =>
           val copies = spark.range(factor).toDF("__i")
-          keys.foldLeft(df.crossJoin(copies))((d, k) =>
-            d.withColumn(k, col(k) + col("__i") * Shift)).drop("__i")
+          df.crossJoin(copies)
+            .withColumns(keys.map(k => k -> (col(k) + col("__i") * Shift)).toMap)
+            .drop("__i")
       }
       out.write.mode("overwrite").parquet(s"$dst/$t.parquet")
       ()

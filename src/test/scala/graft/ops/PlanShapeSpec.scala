@@ -620,4 +620,56 @@ class PlanShapeSpec extends AnyFunSuite {
     // and the argmax runs on the native cosine kernel
     assert(s.contains("cosine_similarity"), s)
   }
+
+  test("storm summaries: one per-file aggregate — exactly one hash " +
+      "exchange and no join in the final plan") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val df = ParseOps.stormSummaries(spark, dir)
+    df.collect()
+    def all(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => all(a.executedPlan)
+      case q: QueryStageExec => all(q.plan)
+      case _ => p.children.flatMap(all)
+    })
+    val nodes = all(df.queryExecution.executedPlan)
+    val s = df.queryExecution.executedPlan.toString()
+    // the name mode rides the per-file aggregate: the count-then-join
+    // form added two shuffles (per (file, name), then per file) and a
+    // left join back to the summary rows
+    val hashExchanges = nodes.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    assert(hashExchanges.size == 1, s)
+    assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]), s)
+  }
+
+  test("b-deck parse: the analyzed plan adds at most 3 Projects over its " +
+      "input lines, not one per decoded column") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    import spark.implicits._
+    def projects(p: LogicalPlan) = p.collect { case x: Project => x }.size
+    val lines = Seq(("bal012022.dat", "AL, 01, 2022092000")).toDF("file", "value")
+    val parsed = graft.parse.AtcfParser.parseBDeck(lines)
+    val added = projects(parsed.queryExecution.analyzed) -
+      projects(lines.queryExecution.analyzed)
+    assert(added <= 3, parsed.queryExecution.analyzed.treeString)
+    assert(parsed.columns.length == 1 + graft.schema.Schemas.bDeckColumns.size)
+  }
+
+  test("merge upsert: the incoming side is renamed in one Project") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project}
+    import spark.implicits._
+    def projects(p: LogicalPlan) = p.collect { case x: Project => x }.size
+    val existing = Seq((1, "a", 1.0), (2, "b", 2.0)).toDF("k", "s", "v")
+    val incoming = Seq((2, "c", 3.0), (3, "d", 4.0)).toDF("k", "s", "v")
+    val merged = graft.merge.Merge.upsert(existing, incoming, Seq("k"))
+    val join = merged.queryExecution.analyzed.collectFirst { case j: Join => j }.get
+    assert(join.right.isInstanceOf[Project], join.treeString)
+    assert(projects(join.right) - projects(incoming.queryExecution.analyzed) == 1,
+      join.treeString)
+  }
 }
